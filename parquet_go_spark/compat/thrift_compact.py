@@ -59,6 +59,8 @@ def _read_value(buf, pos: int, vtype: int, depth: int = 0):
     if vtype == T_BINARY:
         ln, pos = read_uvarint(buf, pos)
         return bytes(buf[pos : pos + ln]), pos + ln
+    if vtype in (T_LIST, T_SET, T_MAP) and depth > _MAX_DEPTH:
+        raise ValueError("thrift compact: implausible nesting depth")
     if vtype in (T_LIST, T_SET):
         hdr = buf[pos]
         pos += 1
@@ -75,7 +77,7 @@ def _read_value(buf, pos: int, vtype: int, depth: int = 0):
             return out, pos + size
         out = []
         for _ in range(size):
-            v, pos = _read_elem(buf, pos, etype, depth)
+            v, pos = _read_elem(buf, pos, etype, depth + 1)
             out.append(v)
         return out, pos
     if vtype == T_STRUCT:
@@ -90,8 +92,8 @@ def _read_value(buf, pos: int, vtype: int, depth: int = 0):
         ktype, vt = kv >> 4, kv & 0x0F
         out = {}
         for _ in range(size):
-            k, pos = _read_elem(buf, pos, ktype, depth)
-            v, pos = _read_elem(buf, pos, vt, depth)
+            k, pos = _read_elem(buf, pos, ktype, depth + 1)
+            v, pos = _read_elem(buf, pos, vt, depth + 1)
             out[k] = v
         return out, pos
     raise ValueError(f"thrift compact: unsupported type {vtype}")
@@ -117,9 +119,9 @@ def _read_elem(buf, pos: int, etype: int, depth: int = 0):
 
 
 _MAX_DEPTH = 100  # parquet metadata nests ~10 deep; a forged buffer of
-# 0x1C bytes would otherwise recurse once per byte into Python's
-# RecursionError — an uncontrolled failure, unlike the governor's
-# ValueError
+# 0x1C (struct) or 0x19 (list) bytes would otherwise recurse once per
+# byte into Python's RecursionError — an uncontrolled failure, unlike
+# the governor's ValueError. Structs and collections both count.
 
 
 def read_struct(buf, pos: int, depth: int = 0) -> tuple[dict, int]:

@@ -42,7 +42,7 @@ import pyarrow as pa
 
 from ..kernels import bitpack  # noqa: F401  (re-exported for selectors)
 from ..kernels import alp, bytearrays, bytestreamsplit, deltabp, dictenc, forbp, fsst, hybrid, levels, plain
-from ..kernels.varint import read_uvarint, uvarint
+from ..kernels.varint import MAX_VALUES, read_uvarint, uvarint
 from .columns import ColumnData, gather_segments
 
 __all__ = [
@@ -58,8 +58,6 @@ __all__ = [
 
 MAGIC = b"PGSC"
 VERSION = 1
-# decode-side allocation cap (reference WithMaximumMemorySize, alloc.go)
-MAX_DECODE_ROWS = 1 << 28
 DICT_MAX = 32767  # math.MaxInt16, type_dict.go:101 / chunk_writer.go:188,200
 DEFAULT_PAGE = 1 << 20  # data_store.go:149-154
 
@@ -892,7 +890,7 @@ def chunk_dict_values(blob) -> set | None:
     pos = 9
     num_rows, pos = read_uvarint(mv, pos)
     null_count, pos = read_uvarint(mv, pos)
-    if num_rows > MAX_DECODE_ROWS or null_count > num_rows:
+    if num_rows > MAX_VALUES or null_count > num_rows:
         raise ValueError("implausible chunk header")
     type_length = 0
     if ptype == "flba":
@@ -937,7 +935,7 @@ def chunk_page_index(blob) -> list[dict] | None:
     pos = 9
     num_rows, pos = read_uvarint(mv, pos)
     _nulls, pos = read_uvarint(mv, pos)
-    if num_rows > MAX_DECODE_ROWS:
+    if num_rows > MAX_VALUES:
         raise ValueError("implausible chunk header")
     if ptype == "flba":
         _tl, pos = read_uvarint(mv, pos)
@@ -1036,7 +1034,7 @@ def decode_chunk(blob, logical: str = "", row_sel=None):
     # allocations a header can demand before touching numpy — RLE packs
     # millions of rows into a few bytes legitimately, so the bound is an
     # absolute allocation budget, not blob-relative
-    if num_rows > MAX_DECODE_ROWS or null_count > num_rows:
+    if num_rows > MAX_VALUES or null_count > num_rows:
         raise ValueError(f"implausible chunk header: rows={num_rows} nulls={null_count}")
     type_length = 0
     if ptype == "flba":

@@ -27,7 +27,7 @@ from __future__ import annotations
 import numpy as np
 
 from . import bitpack
-from .varint import read_uvarint, read_varint, uvarint, varint, varint_array
+from .varint import MAX_VALUES, read_uvarint, read_varint, uvarint, varint, varint_array
 
 __all__ = ["encode", "decode", "BLOCK_SIZE", "MINI_BLOCKS", "MINI_BLOCK_VALUES"]
 
@@ -35,6 +35,11 @@ BLOCK_SIZE = 128
 MINI_BLOCKS = 4
 MINI_BLOCK_VALUES = BLOCK_SIZE // MINI_BLOCKS  # 32
 _GO_MAXINT32 = 2147483647
+# A zero-width miniblock stores its values in one width byte, so a
+# stream claims at most this many values per input byte. Writers use
+# 32 (128/4: parquet-mr, arrow, the reference) up to 256 (DuckDB's
+# 2048/8); a forged 2^20/1 structure claimed 30M values in 67 bytes.
+MAX_MINIBLOCK_VALUES = 1 << 12
 
 
 def _bit_length_u64(m: np.ndarray) -> np.ndarray:
@@ -151,8 +156,13 @@ def decode(buf, pos: int, bits: int) -> tuple[np.ndarray, int]:
     mbv = block_size // mini_blocks
     if mbv % 8 != 0:
         raise ValueError("delta-bp: miniblock values not multiple of 8")
+    if mbv > MAX_MINIBLOCK_VALUES:
+        raise ValueError(f"delta-bp: implausible miniblock of {mbv} values")
     count, pos = read_uvarint(mv, pos)
     first, pos = read_varint(mv, pos)
+    # every miniblock holding data costs at least its width byte
+    if count > MAX_VALUES or count - 1 > (len(mv) - pos) * mbv:
+        raise ValueError(f"delta-bp: implausible count {count}")
     if count == 0:
         return np.empty(0, dtype=sdt), pos
     nd = count - 1

@@ -30,7 +30,7 @@ from __future__ import annotations
 import numpy as np
 
 from . import bitpack
-from .varint import read_uvarint, read_varint, uvarint, varint
+from .varint import MAX_VALUES, read_uvarint, read_varint, uvarint, varint
 
 __all__ = ["encode", "decode", "estimate_size"]
 
@@ -63,7 +63,7 @@ def decode(buf, pos: int, bits: int) -> tuple[np.ndarray, int]:
     sdt, _udt = _dtypes(bits)
     mv = memoryview(buf).cast("B")  # normalize signed buffer views
     n, pos = read_uvarint(mv, pos)
-    if n > 1 << 28:
+    if n > MAX_VALUES:
         # allocation governor: a width-0 stream stores no packed bytes,
         # so a forged count would otherwise allocate unbounded zeros
         raise ValueError(f"for_bp: implausible count {n}")

@@ -16,7 +16,14 @@ __all__ = [
     "read_varint",
     "zigzag",
     "unzigzag",
+    "MAX_VALUES",
 ]
+
+# decode-side allocation cap on the values one stream header may claim
+# (reference WithMaximumMemorySize, alloc.go): run-length-like streams
+# (width-0 FOR, zero-width delta-BP miniblocks) describe many values in
+# a few bytes, so the claim alone must not size an allocation
+MAX_VALUES = 1 << 28
 
 _SHIFTS = np.arange(0, 70, 7, dtype=np.uint64)  # 10 groups cover 64 bits
 

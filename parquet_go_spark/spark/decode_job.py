@@ -18,6 +18,7 @@ from ..core.chunk import chunk_page_index, decode_chunk
 from ..core.columns import one_chunk, to_arrow
 from . import manifest as mf
 from .encode_job import parse_partition_file, partition_file_epoch
+from .session import empty_frame
 
 
 _NUM_PTYPES = {"int32", "int64", "float", "double"}
@@ -569,7 +570,7 @@ def decode_table(
         paths = [p for p in paths if _os.path.basename(p) in keep]
     if not paths:
         # empty input (zero-task encode) or everything pruned
-        return spark.createDataFrame([], schema=out_ddl)
+        return empty_frame(spark, out_ddl)
     files = spark.read.format("binaryFile").load(paths).select("path", "content")
 
     # merge-on-read delete sidecars: the apply set is pinned by the

@@ -36,6 +36,7 @@ from ..compat.parquet_reader import (
     read_table_arrow,
     schema_tree,
 )
+from .session import empty_frame
 
 __all__ = ["read_parquet_table", "parquet_scan_schema", "file_prunes"]
 
@@ -296,7 +297,7 @@ def read_parquet_table(
     out_ddl = ", ".join(f"`{n}` {ddl}" for n, _, ddl in schema)
     tasks = plan_scan_tasks(files, prune)
     if not tasks:
-        return spark.createDataFrame([], schema=out_ddl)
+        return empty_frame(spark, out_ddl)
     target = {n: _spark_arrow_type(ddl) for n, _, ddl in schema}
 
     fdf = spark.createDataFrame(

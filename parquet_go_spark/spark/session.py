@@ -5,13 +5,29 @@ Arrow-batched Python UDF transfer, shuffle partitions sized to cores, and
 glibc malloc tuned in the Python workers — this sandbox (and container
 fleets generally) fault in fresh pages very slowly, so workers must reuse
 arena memory instead of mmap/munmap-ing every large numpy temporary.
+
+Python workers start through the engine's own daemon,
+``parquet_go_spark.spark.pyworker`` (``spark.python.daemon.module``).
+Every Python task (encode, decode, the Parquet sink and source, the
+datasource) runs pyspark's per-task set-up, which calls
+``importlib.invalidate_caches()``; on CPython < 3.12 that re-reads the
+central directory of ``pyspark.zip`` once per zip importer, 120-200 ms of
+CPU per task before any engine code runs. The daemon makes that refresh
+lazy (re-read only an archive whose mtime or size changed, as CPython
+3.12 does) and then runs ``pyspark.daemon`` unchanged; on 3.12+ it only
+runs ``pyspark.daemon``. The daemon has to be importable whatever the
+driver's working directory, so ``spark.executorEnv.PYTHONPATH`` carries
+the package root, ahead of any ``PYTHONPATH`` already set.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+# the directory holding the parquet_go_spark package
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # keep freed pages in the worker's arena: first-touch page faults are the
 # dominant cost for large numpy temporaries in sandboxed containers
@@ -55,7 +71,7 @@ def get_spark(
         # scan-split size: smaller splits give even waves per core at low
         # parallelism (the N vs 4N scaling config pins 64m — the classic
         # HDFS/Iceberg block size); the local[32] default keeps bigger
-        # splits so the ~140 ms/task python handshake stays amortized
+        # splits so the per-task python handshake stays amortized
         .config(
             "spark.sql.files.maxPartitionBytes",
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "256m"),
@@ -64,6 +80,8 @@ def get_spark(
         .config("spark.driver.maxResultSize", "4g")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.python.daemon.module", "parquet_go_spark.spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", _worker_pythonpath())
     )
     local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
     if local_dir:
@@ -77,3 +95,19 @@ def get_spark(
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def empty_frame(spark: SparkSession, ddl: str) -> DataFrame:
+    """A typed empty DataFrame with zero partitions, so reading it
+    launches no task (``createDataFrame([])`` plans one Python task per
+    core)."""
+    return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema=ddl)
+
+
+def _worker_pythonpath() -> str:
+    """The package root, then the driver's ``PYTHONPATH`` entries."""
+    paths = [PACKAGE_ROOT]
+    for p in os.environ.get("PYTHONPATH", "").split(os.pathsep):
+        if p and p not in paths:
+            paths.append(p)
+    return os.pathsep.join(paths)

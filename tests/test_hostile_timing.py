@@ -60,6 +60,10 @@ def test_thrift_hostile_battery():
     ]
     for buf in batteries:
         _fast(read_struct, buf, 0)
+    # deep nesting through collections: depth used to grow only at
+    # STRUCT, so lists of lists recursed into a RecursionError
+    with pytest.raises(ValueError, match="nesting depth"):
+        read_struct(bytes([0x19]) + bytes([0x19]) * 2000 + b"\x10\x00", 0)
 
 
 def test_partition_file_hostile_battery():
@@ -139,6 +143,19 @@ def test_deltabp_hostile_battery():
     for buf in batteries:
         _fast(deltabp.decode, buf, 0, 32)
         _fast(deltabp.decode, buf, 0, 64)
+    # zero-width 2^20/1 blocks: a 67-byte stream claiming 30M values
+    # (decoded at ~1.4 GB RSS before the values-per-byte governor)
+    zero_blocks = _varint(1 << 20) + _varint(1) + _varint(30_000_001) + b"\x02" + b"\x00\x00" * 29
+    assert len(zero_blocks) == 67
+    for bits in (32, 64):
+        t = time.time()
+        with pytest.raises(ValueError):
+            deltabp.decode(zero_blocks, 0, bits)
+        assert time.time() - t < 1.0
+    # the same claim in the reference's 128/4 structure runs out of bytes
+    short = _varint(128) + _varint(4) + _varint(30_000_001) + b"\x02" + b"\x00" * 60
+    with pytest.raises(ValueError, match="implausible count"):
+        deltabp.decode(short, 0, 64)
 
 
 def test_forbp_width0_large_count_is_fast_and_constant():

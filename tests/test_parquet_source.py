@@ -114,6 +114,15 @@ def test_pruned_scan_still_exact(spark, pq_dir):
     assert got == exp
 
 
+def test_all_pruned_scan_launches_no_task(spark, pq_dir):
+    """A scan whose predicate drops every row group returns a typed,
+    zero-partition frame: no Python task runs to produce nothing."""
+    df = read_parquet_table(spark, pq_dir, prune=[("i", "==", -1)])
+    assert df.rdd.getNumPartitions() == 0
+    assert df.schema == read_parquet_table(spark, pq_dir).schema
+    assert df.where("i = -1").toArrow().num_rows == 0
+
+
 def test_string_stats_prune(pq_dir):
     files = sorted(glob.glob(pq_dir + "/*.parquet"))
     # every file holds w0..w10 => no string predicate can drop a file

@@ -35,6 +35,23 @@ def test_nan_float_bounds_never_prune_matching_rows(spark, tmp_path):
     assert got_le == 10  # ids 0..10 minus id 7 (its value IS the NaN)
 
 
+def test_all_pruned_decode_launches_no_task(spark, tmp_path):
+    """Every partition proven empty for the predicate: decode_table
+    returns a typed, zero-partition frame, so no Python task runs."""
+    from parquet_go_spark.spark.decode_job import decode_table, surviving_partitions
+    from parquet_go_spark.spark.encode_job import encode_table
+
+    df = spark.createDataFrame([(i, f"u{i:03d}") for i in range(100)], "id long, url string")
+    out = str(tmp_path / "enc")
+    encode_table(df, out, key_col="id", partitions=2).collect()
+    pred = [("id", ">=", 1000)]
+    assert surviving_partitions(out, pred) == []
+    got = decode_table(spark, out, prune=pred)
+    assert got.rdd.getNumPartitions() == 0
+    assert got.schema == decode_table(spark, out).schema
+    assert got.where("id >= 1000").toArrow().num_rows == 0
+
+
 def test_all_nan_chunk_has_no_bounds(spark):
     import numpy as np
 
