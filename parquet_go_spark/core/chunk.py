@@ -982,28 +982,52 @@ def chunk_page_index(blob) -> list[dict] | None:
     return out
 
 
-def _page_row_mask(row_sel, cursor: int, rows: int) -> np.ndarray | None:
-    """Bool mask over one page's rows for global row ranges ``row_sel``;
-    None when the page is entirely outside every range (skip it)."""
-    mask = None
-    for lo, hi in row_sel:
-        a, b = max(lo - cursor, 0), min(hi - cursor, rows)
-        if a < b:
-            if mask is None:
-                mask = np.zeros(rows, dtype=bool)
-            mask[a:b] = True
-    return mask
+def chunk_ptype(blob) -> str | None:
+    """Physical type of a flat chunk from its fixed header bytes; None
+    for nested containers (PGSL/PGSS) and anything unrecognized."""
+    mv = memoryview(blob).cast("B")
+    if len(mv) < 9 or bytes(mv[:4]) != MAGIC:
+        return None
+    return PTYPES_R.get(mv[5])
+
+
+def _row_sel_bounds(row_sel) -> tuple[np.ndarray, np.ndarray]:
+    """``row_sel`` ranges -> (lo, hi) int64 arrays, both ascending,
+    covering the same rows: the form ``_page_row_mask`` searches. Empty
+    ranges drop out; ``hi`` becomes its running maximum, which leaves
+    the union unchanged once ``lo`` is sorted."""
+    r = np.asarray(row_sel, dtype=np.int64).reshape(-1, 2)
+    r = r[r[:, 1] > r[:, 0]]
+    if len(r) > 1 and (np.diff(r[:, 0]) < 0).any():
+        r = r[np.argsort(r[:, 0], kind="stable")]
+    return r[:, 0], np.maximum.accumulate(r[:, 1])
+
+
+def _page_row_mask(lo: np.ndarray, hi: np.ndarray, cursor: int, rows: int) -> np.ndarray | None:
+    """Bool mask over one page's rows for the global row ranges
+    ``[lo, hi)`` (``_row_sel_bounds``); None when the page is entirely
+    outside every range (skip it). Only the ranges overlapping the page
+    are touched — two binary searches, not a walk over every range."""
+    a = int(np.searchsorted(hi, cursor, side="right"))  # first range ending past the page start
+    b = int(np.searchsorted(lo, cursor + rows, side="left"))  # ranges starting before its end
+    if a >= b:
+        return None
+    starts = np.clip(lo[a:b] - cursor, 0, rows)
+    ends = np.clip(hi[a:b] - cursor, 0, rows)
+    edges = np.bincount(starts, minlength=rows + 1) - np.bincount(ends, minlength=rows + 1)
+    return np.cumsum(edges[:rows]) > 0
 
 
 def decode_chunk(blob, logical: str = "", row_sel=None):
     """Decode a chunk container back to ColumnData.
 
     ``row_sel`` = sorted, non-overlapping global row ranges
-    ``[(row_lo, row_hi), ...]``: only pages overlapping a range are
-    decompressed and decoded (the rest are seeked past), and decoded
-    pages are trimmed to the exact ranges — so two columns of the same
-    partition decoded with the same ``row_sel`` stay row-aligned even
-    though their page boundaries differ.  Nested containers (PGSL/PGSS)
+    ``[(row_lo, row_hi), ...]`` (or a ``(k, 2)`` int array): only pages
+    overlapping a range are decompressed and decoded (the rest are
+    seeked past), and decoded pages are trimmed to the exact ranges —
+    so two columns of the same partition decoded with the same
+    ``row_sel`` stay row-aligned even though their page boundaries
+    differ.  Nested containers (PGSL/PGSS)
     do not support ``row_sel``; callers fall back to a full decode plus
     an Arrow-level take."""
     mv = memoryview(blob).cast("B")  # normalize signed buffer views
@@ -1072,6 +1096,8 @@ def decode_chunk(blob, logical: str = "", row_sel=None):
     data_parts = []
     if num_pages > len(mv):
         raise ValueError("implausible page count")
+    if row_sel is not None:
+        sel_lo, sel_hi = _row_sel_bounds(row_sel)
     row_cursor = 0
     for page_i in range(num_pages):
         rows, pos = read_uvarint(mv, pos)
@@ -1087,11 +1113,13 @@ def decode_chunk(blob, logical: str = "", row_sel=None):
         if rows > num_rows or nulls > rows or pos + comp_len > len(mv) or raw_len > (comp_len + 64) * 1024:
             raise ValueError("implausible page header")
         if row_sel is not None:
-            mask = _page_row_mask(row_sel, row_cursor, rows)
+            mask = _page_row_mask(sel_lo, sel_hi, row_cursor, rows)
             row_cursor += rows
             if mask is None:
                 pos += comp_len  # seek past: never decompressed
                 continue
+            if mask.all():
+                mask = None  # whole page selected: nothing to trim
         else:
             mask = None
             row_cursor += rows

@@ -26,9 +26,39 @@ spins.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+import threading
+from contextlib import contextmanager
+
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 __all__ = ["dup_clusters", "canonical_docs"]
+
+_CP = "spark.sql.constraintPropagation.enabled"
+_cp_lock = threading.Lock()
+_cp_users: dict = {}  # JVM session -> [callers inside, value to restore]
+
+
+@contextmanager
+def _constraint_propagation_off(spark: SparkSession):
+    """Turn constraint propagation off for the block. Overlapping blocks
+    on one session share the toggle: the first caller in records the
+    session's value and the last caller out restores it, so an overlap
+    can never leave the conf off for good."""
+    key = getattr(spark, "_jsparkSession", spark)
+    with _cp_lock:
+        entry = _cp_users.get(key)
+        if entry is None:
+            entry = _cp_users[key] = [0, spark.conf.get(_CP, "true")]
+            spark.conf.set(_CP, "false")
+        entry[0] += 1
+    try:
+        yield
+    finally:
+        with _cp_lock:
+            entry[0] -= 1
+            if not entry[0]:
+                del _cp_users[key]
+                spark.conf.set(_CP, entry[1])
 
 
 def dup_clusters(
@@ -44,22 +74,20 @@ def dup_clusters(
     ``pairs`` carries (id_a, id_b) candidate edges (e.g. ``lsh_pairs``
     output); treated as undirected."""
     spark = docs.sparkSession
-    # Constraint propagation is OFF for the iteration (restored in the
-    # finally): a checkpointed LogicalRDD keeps the ORIGIN plan's
-    # inferred constraints, whose attribute ids no longer exist in the
-    # checkpoint's fresh output — Spark's Union.rewriteConstraints then
-    # dies with an internal 'NoSuchElementException: key not found:
-    # id#N' the first time a later round unions that state (reproduced
+    # Constraint propagation is OFF for the iteration (restored on
+    # exit, see _constraint_propagation_off): a checkpointed
+    # LogicalRDD keeps the ORIGIN plan's inferred constraints, whose
+    # attribute ids no longer exist in the checkpoint's fresh output —
+    # Spark's Union.rewriteConstraints then dies with an internal
+    # 'NoSuchElementException: key not found: id#N' the first time a
+    # later round unions that state (reproduced
     # the moment ``pairs`` composes two detectors over one docs frame,
     # e.g. lsh_pairs ∪ simhash_near_dups, and on any join-derived docs
     # lineage). The loop's trivial filters gain nothing from inferred
     # constraints anyway, and constraint growth across iterative unions
     # is itself a known analysis-time sink. The returned frame is built
     # AFTER the flag is restored and carries no union.
-    _CP = "spark.sql.constraintPropagation.enabled"
-    _cp_old = spark.conf.get(_CP, "true")
-    spark.conf.set(_CP, "false")
-    try:
+    with _constraint_propagation_off(spark):
         # symmetrize with ONE explode pass, not a self-union of the
         # pairs plan — reads pairs once and halves the candidate scan
         edges = (
@@ -125,8 +153,6 @@ def dup_clusters(
                 "diameter exceeds the cap; raise max_iter or switch to "
                 "large-star/small-star for deep-path graphs"
             )
-    finally:
-        spark.conf.set(_CP, _cp_old)
     # output contract: one row per DOC (edge-only vertices served as
     # connectivity bridges, not corpus members)
     return labels.join(doc_ids, "id").select(

@@ -147,9 +147,11 @@ def _filter_to_prune(f: Filter) -> list[tuple]:
     Strict < and > push as their inclusive forms, StartsWith as a prefix
     range — pruning is conservative and Spark re-applies the exact
     predicate anyway."""
-    if len(f.attribute) != 1:  # nested column paths carry no chunk stats
+    attr = getattr(f, "attribute", None)
+    if attr is None or len(attr) != 1:
+        # Not(...) carries no column; nested column paths carry no chunk stats
         return []
-    col = f.attribute[0]
+    col = attr[0]
     if isinstance(f, IsNotNull):
         return [(col, "notnull", None)]
     if isinstance(f, In):

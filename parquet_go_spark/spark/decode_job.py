@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 import numpy as np
 
-from ..core.chunk import chunk_page_index, decode_chunk
+from ..core.chunk import chunk_page_index, chunk_ptype, decode_chunk
 from ..core.columns import one_chunk, to_arrow
 from . import manifest as mf
 from .encode_job import parse_partition_file, partition_file_epoch
@@ -78,6 +78,19 @@ def _bounds_exclude_eq(value, mn, mx, kind: str = "num") -> bool:
     return False
 
 
+def _nan_ranks_top(ptype: str | None) -> bool:
+    """Float columns: bounds skip NaN, and Spark orders NaN above every
+    value, so a NaN row satisfies any ``>=`` and no bound proves one."""
+    return ptype in ("float", "double")
+
+
+def _max_excludes_ge(value, mx, ptype: str | None) -> bool:
+    """Upper bound ``mx`` proves ``>= value`` unsatisfiable."""
+    if mx is None or _nan_ranks_top(ptype):
+        return False
+    return _le_bound(value, mx, _bound_kind(ptype)) is False
+
+
 def _page_excludes(op: str, value, page: dict) -> bool:
     """True when a page's stats provably exclude the predicate
     (None bound = unknown, never excludes)."""
@@ -90,7 +103,7 @@ def _page_excludes(op: str, value, page: dict) -> bool:
     if op == "<=":
         return mn is not None and _le_bound(mn, value, kind) is False
     if op == ">=":
-        return mx is not None and _le_bound(value, mx, kind) is False
+        return _max_excludes_ge(value, mx, page.get("ptype"))
     if op == "notnull":
         # every row of the page is null ⇒ no non-null value can match
         return page.get("nulls", 0) >= page["row_hi"] - page["row_lo"]
@@ -128,10 +141,10 @@ def _dict_key(v, ptype: str):
             return bytes(v) if isinstance(v, (bytes, bytearray, memoryview)) else None
         if ptype in ("int32", "int64"):
             return int(v)
-        if ptype == "float":
-            return float(np.float32(v))
-        if ptype == "double":
-            return float(v)
+        if ptype in ("float", "double"):
+            f = float(np.float32(v)) if ptype == "float" else float(v)
+            # NaN never equals a set member, yet Spark's NaN = NaN holds
+            return None if f != f else f
     except (TypeError, ValueError, UnicodeEncodeError):
         return None
     return None
@@ -224,7 +237,7 @@ def surviving_partitions(
                     return False
             elif op == "<=" and mn is not None and _le(mn, value, kind) is False:
                 return False
-            elif op == ">=" and mx is not None and _le(value, mx, kind) is False:
+            elif op == ">=" and _max_excludes_ge(value, mx, r["ptype"]):
                 return False
             elif op == "notnull" and r["null_count"] >= r["num_rows"]:
                 return False  # all-null chunk: no non-null value to match
@@ -273,6 +286,160 @@ def _surviving_ranges(prune: list[tuple], blobs: dict) -> tuple[list[tuple] | No
     return ranges, total
 
 
+def _num_probe(v) -> float | None:
+    """A numeric column's probe as the float the page tier compares it
+    as (``_le_bound`` "num"); None = no proof: a non-numeric Python
+    type, a bool, NaN, or an int past the float range."""
+    if isinstance(v, (bool, np.bool_)) or not isinstance(v, (int, float, np.integer, np.floating)):
+        return None
+    try:
+        f = float(v)
+    except OverflowError:
+        return None
+    return None if f != f else f
+
+
+def _str_probe(v) -> bytes | None:
+    """A string column's probe as UTF-8 bytes, whose byte order is the
+    page tier's codepoint order; None = no proof: a non-string type, or
+    bytes that do not decode (``_le_bound`` cannot order them)."""
+    try:
+        if isinstance(v, str):
+            return v.encode("utf-8")
+        if isinstance(v, bytes):
+            v.decode("utf-8")
+            return v
+    except (UnicodeEncodeError, UnicodeDecodeError):
+        pass
+    return None
+
+
+def _row_probes(op: str, value, ptype: str | None) -> list | None:
+    """The predicate's probes in the form ``_row_keep`` compares, or
+    None when the row tier cannot prove it on this column: an unknown
+    op, a nested, bool or flba (decimal) column, ``>=`` on a float
+    column (``_nan_ranks_top``), or any probe whose Python type does not
+    match the column's ordering family."""
+    kind = "none" if ptype in ("bool", "flba") else _bound_kind(ptype)
+    if kind == "none":
+        return None
+    if op == "notnull":
+        return []
+    if op not in ("==", "in", "<=", ">=") or (op == ">=" and _nan_ranks_top(ptype)):
+        return None
+    try:
+        raw = tuple(value) if op == "in" else (value,)
+    except TypeError:
+        return None
+    conv = _num_probe if kind == "num" else _str_probe
+    probes = [conv(v) for v in raw]
+    return None if any(p is None for p in probes) else probes
+
+
+def _bool_values(arr: "pa.BooleanArray") -> np.ndarray:
+    """Null-free Arrow booleans -> numpy bool, by unpacking the bitmap
+    (``to_numpy(zero_copy_only=False)`` would import pandas)."""
+    if not len(arr):
+        return np.zeros(0, dtype=bool)
+    bits = np.frombuffer(arr.buffers()[1], dtype=np.uint8)
+    return np.unpackbits(bits, count=arr.offset + len(arr), bitorder="little")[arr.offset :].view(bool)
+
+
+def _str_hits(op: str, probes: list, cd) -> np.ndarray:
+    """Per non-null value of a bytes column: may it satisfy the
+    predicate? Byte-wise compare through Arrow; a value that is not
+    valid UTF-8 always may (the page tier has no order for it)."""
+    import pyarrow.compute as pc
+
+    n = len(cd.lengths)
+    offsets = np.zeros(n + 1, np.int64)
+    np.cumsum(cd.lengths, out=offsets[1:])
+    bufs = [None, pa.py_buffer(offsets), pa.py_buffer(np.ascontiguousarray(cd.data))]
+    arr = pa.Array.from_buffers(pa.large_binary(), n, bufs)
+    if op == "in":
+        res = pc.is_in(arr, value_set=pa.array(probes, pa.large_binary()))
+    else:
+        cmp = {"==": pc.equal, "<=": pc.less_equal, ">=": pc.greater_equal}[op]
+        res = cmp(arr, pa.scalar(probes[0], pa.large_binary()))
+    hits = _bool_values(res)
+    try:
+        pa.Array.from_buffers(pa.large_string(), n, bufs).validate(full=True)
+    except pa.ArrowInvalid:
+        data = cd.data
+        for i in np.flatnonzero(~hits):
+            try:
+                bytes(data[offsets[i] : offsets[i + 1]]).decode("utf-8")
+            except UnicodeDecodeError:
+                hits[i] = True
+    return hits
+
+
+def _row_keep(op: str, probes: list, cd) -> np.ndarray:
+    """Row tier: keep mask over a decoded flat column's rows for one
+    predicate (``probes`` from ``_row_probes``). It is ``_page_excludes``
+    applied to one-row pages: a row drops only when a page whose min and
+    max are both its value would be excluded. NaN values never drop, and
+    a null row drops only under ``notnull``."""
+    if op == "notnull":
+        return cd.validity
+    if cd.ptype == "bytes":
+        hits = _str_hits(op, probes, cd)
+    else:
+        v = cd.values.astype(np.float64, copy=False)
+        if op == "in":
+            hits = np.isin(v, probes)
+        elif op == "==":
+            hits = v == probes[0]
+        elif op == "<=":
+            hits = v <= probes[0]
+        else:
+            hits = v >= probes[0]
+        if _nan_ranks_top(cd.ptype):
+            hits |= np.isnan(v)
+    keep = np.ones(cd.num_rows, dtype=bool)  # null rows stay
+    keep[cd.validity] = hits
+    return keep
+
+
+def _prove_rows(prune: list[tuple], blobs: dict, logicals: dict, row_sel) -> tuple[dict, "np.ndarray | None"]:
+    """Decode each provable predicate column over the page tier's
+    ``row_sel`` and AND their ``_row_keep`` masks. Returns ({column:
+    decoded ColumnData}, keep mask over those rows or None when no
+    predicate proves anything)."""
+    decoded: dict = {}
+    keep = None
+    for col, op, value in prune:
+        blob = blobs.get(col)
+        if blob is None:
+            continue  # evolved away: no proof
+        probes = _row_probes(op, value, chunk_ptype(blob))
+        if probes is None:
+            continue
+        if col not in decoded:
+            decoded[col] = decode_chunk(blob, logical=logicals.get(col, ""), row_sel=row_sel)
+        m = _row_keep(op, probes, decoded[col])
+        keep = m if keep is None else keep & m
+    return decoded, keep
+
+
+def _selected_rows(row_sel, n: int) -> np.ndarray:
+    """Partition row ids a decode over ``row_sel`` returns, in order
+    (all ``n`` rows when ``row_sel`` is None)."""
+    if row_sel is None:
+        return np.arange(n, dtype=np.int64)
+    r = np.asarray(row_sel, dtype=np.int64).reshape(-1, 2)
+    lens = r[:, 1] - r[:, 0]
+    return np.repeat(r[:, 0] - np.cumsum(lens) + lens, lens) + np.arange(lens.sum())
+
+
+def _runs(ids: np.ndarray) -> np.ndarray:
+    """Ascending row ids -> (k, 2) ``[lo, hi)`` runs of consecutive ids."""
+    brk = np.flatnonzero(np.diff(ids) != 1) + 1
+    lo = ids[np.concatenate([[0], brk])]
+    hi = ids[np.concatenate([brk - 1, [len(ids) - 1]])] + 1
+    return np.stack([lo, hi], axis=1)
+
+
 def missing_column_rows(enc_dir: str, pid: int, missing: set[str]) -> int:
     """Validate that the ``missing`` selected columns were never written
     to partition ``pid`` (schema evolution: the column was added after
@@ -301,10 +468,15 @@ def decode_blobs_to_batch(
     eq_deletes: "list[tuple] | None" = None,
 ) -> "pa.RecordBatch | None":
     """Decode one partition's column blobs into a row-aligned Arrow
-    batch, applying page-level pruning (``_surviving_ranges``) when the
-    predicates and page stats allow it. None when every row is pruned
-    or the partition is empty. Selected columns absent from ``blobs``
-    (schema evolution) are filled with typed nulls (``arrow_types``);
+    batch. ``prune`` narrows the rows in two tiers: the page tier
+    (``_surviving_ranges``) seeks past pages whose stats exclude a
+    predicate, then the row tier (``_prove_rows``) decodes each
+    predicate column over the surviving pages and keeps only the rows
+    no predicate provably excludes; every other column then decodes
+    just the pages holding a surviving row. None when every row is
+    pruned or the partition is empty. Selected columns absent from
+    ``blobs`` (schema evolution) are filled with typed nulls
+    (``arrow_types``);
     ``fallback_rows`` supplies the row count when NO selected column is
     present in the partition. ``delete_pos`` (sorted int64 row ordinals
     within the partition, merge-on-read sidecars) drops those rows from
@@ -320,6 +492,8 @@ def decode_blobs_to_batch(
         # dedupe, order-stable
         cols = list(dict.fromkeys(cols))
     row_sel = None
+    pre: dict = {}
+    proven = None  # row-tier mask over the rows ``pre`` holds
     if prune:
         ranges, total = _surviving_ranges(prune, blobs)
         if ranges is not None:
@@ -327,30 +501,36 @@ def decode_blobs_to_batch(
                 return None  # every page of some predicate excluded
             if ranges != [(0, total)]:  # partial ⇒ page-seek decode
                 row_sel = ranges
+        pre, proven = _prove_rows(prune, blobs, logicals, row_sel)
+        if proven is not None:
+            if not proven.any():
+                return None  # no row can satisfy every predicate
+            if proven.all():
+                proven = None
+            else:
+                row_sel = _runs(_selected_rows(row_sel, len(proven))[proven])
+                proven = pa.array(proven)
     decoded = {}
     n_rows = None
     for c in cols:
         if c not in blobs:
             continue
         logical = logicals[c]
-        if row_sel is not None and c in nested_cols:
+        if c in pre:
+            # decoded by the row tier over the page ranges: trim it to
+            # the surviving rows instead of decoding it again
+            arr = to_arrow(pre[c])
+            decoded[c] = arr if proven is None else arr.filter(proven)
+        elif row_sel is not None and c in nested_cols:
             # nested containers can't seek pages; decode fully and
             # row-align with an Arrow-level take
-            cd = decode_chunk(blobs[c], logical=logical)
-            idx = np.concatenate([np.arange(lo, hi, dtype=np.int64) for lo, hi in row_sel])
-            arr = to_arrow(cd)
-            arr = one_chunk(arr)
-            decoded[c] = arr.take(pa.array(idx))
-            n_rows = len(idx)
+            arr = one_chunk(to_arrow(decode_chunk(blobs[c], logical=logical)))
+            decoded[c] = arr.take(pa.array(_selected_rows(row_sel, 0)))
         else:
-            cd = decode_chunk(blobs[c], logical=logical, row_sel=row_sel)
-            decoded[c] = to_arrow(cd)
-            n_rows = cd.num_rows
+            decoded[c] = to_arrow(decode_chunk(blobs[c], logical=logical, row_sel=row_sel))
+        n_rows = len(decoded[c])
     if n_rows is None:  # projection selected only evolved-away columns
-        if row_sel is not None:
-            n_rows = sum(hi - lo for lo, hi in row_sel)
-        else:
-            n_rows = fallback_rows or 0
+        n_rows = len(_selected_rows(row_sel, fallback_rows or 0))
     if not n_rows:
         return None
     arrays = []
@@ -363,12 +543,7 @@ def decode_blobs_to_batch(
         arrays.append(one_chunk(a))
     batch = pa.RecordBatch.from_arrays(arrays, names=list(cols))
     if delete_pos is not None and len(delete_pos):
-        if row_sel is not None:
-            row_ids = np.concatenate(
-                [np.arange(lo, hi, dtype=np.int64) for lo, hi in row_sel]
-            )
-        else:
-            row_ids = np.arange(n_rows, dtype=np.int64)
+        row_ids = _selected_rows(row_sel, n_rows)
         # delete_pos is sorted: membership via searchsorted, no hash set
         idx = np.searchsorted(delete_pos, row_ids)
         idx[idx == len(delete_pos)] = 0
@@ -528,21 +703,32 @@ def decode_table(
 
     ``prune`` = [(column, op, value), ...] with op in {"==", "<=", ">=",
     "in", "notnull"} ("in" takes a tuple of values and survives when any
-    value might be present; "notnull" drops all-null chunks/pages):
-    partitions whose manifest min/max provably exclude the predicate are
-    never read (the stats-pruning the reference writes stats for but
-    never uses, ``README.md:47`` — here the manifest makes it real).
-    Equality probes additionally consult the per-chunk bloom filter when
-    the table was encoded with ``bloom_columns`` — the point-lookup path
-    for keys whose min/max spans every partition (urls). When the table
-    was encoded with ``page_stats=True``, surviving partitions are
-    further narrowed to the PAGES the predicates cannot exclude: the
-    predicate column's page index (header walk, no decompression) yields
-    the surviving row ranges, every selected column seeks past
-    non-overlapping pages, and decoded pages are trimmed to the exact
-    ranges so columns stay row-aligned. Pruning is conservative (min/max
-    bounds + no-false-negative blooms); the caller still applies the
-    exact filter."""
+    value might be present; "notnull" drops all-null chunks/pages/rows)
+    narrows the read in four tiers:
+
+    1. manifest min/max: partitions whose bounds provably exclude the
+       predicate are never read (the stats-pruning the reference writes
+       stats for but never uses, ``README.md:47``);
+    2. bloom / dictionary: equality probes consult the per-chunk bloom
+       filter (``bloom_columns``) and, for ``rle_dict`` chunks, the
+       dictionary itself — the point-lookup path for keys whose min/max
+       spans every partition (urls);
+    3. page stats (``page_stats=True``): the predicate column's page
+       index (header walk, no decompression) yields the surviving row
+       ranges;
+    4. rows: inside the task each predicate's own column is decoded over
+       those ranges and a per-row keep mask is built; every other
+       selected column then decodes only the pages holding a surviving
+       row, and the batch carries only the surviving rows.
+
+    The row tier is the page tier applied to one-row pages: a row is
+    dropped only when ``_page_excludes`` would exclude a page whose min
+    and max are both that row's value (NaN values and probes never
+    prove, a null row drops only under "notnull"). Probes whose Python
+    type does not match the column, and bool, decimal and nested
+    columns, give no row proof. Pruning is conservative throughout;
+    the caller still applies the exact filter for what the tiers cannot
+    prove."""
     if as_of is not None and not isinstance(as_of, int):
         as_of = mf.seq_as_of_timestamp(enc_dir, as_of)
     fields = mf.read_table_schema(enc_dir)
@@ -614,16 +800,18 @@ def decode_table(
             continue
 
     def decode_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # predicate columns ride along so their page stats are readable
-        # even when not selected (their pages are never decompressed)
+        import os as _os
+        import zlib as _zlib
+
+        # predicate columns ride along so the page and row tiers can read
+        # them even when not selected
         want = set(cols) | ({p[0] for p in prune} if prune else set())
         for b in batches:
             content_arr = b.column("content")
             for i, path in enumerate(b.column("path")):
-                import os as _os
-
-                bpid = int(_os.path.basename(path.as_py())[len("part-") : -len(".bin")])
-                eq_specs = eq_by_pid.get(bpid)
+                name = _os.path.basename(path.as_py())
+                pid = int(name[len("part-") : -len(".bin")])
+                eq_specs = eq_by_pid.get(pid)
                 want_here = (
                     want | {c for c, _ in eq_specs if c in by_name} if eq_specs else want
                 )
@@ -632,8 +820,8 @@ def decode_table(
                 dpos = (
                     mf.delete_positions(
                         enc_dir,
-                        bpid,
-                        files=del_by_pid[bpid],
+                        pid,
+                        files=del_by_pid[pid],
                         # epoch of the bytes THIS task holds: sidecars
                         # from before an in-place rewrite are skipped
                         # with proof, never applied to compacted rows —
@@ -642,7 +830,7 @@ def decode_table(
                         file_epoch=partition_file_epoch(payload),
                         pinned=pin_deletes,
                     )
-                    if bpid in del_by_pid
+                    if pid in del_by_pid
                     else None
                 )
                 missing = set(cols) - set(blobs)
@@ -650,19 +838,10 @@ def decode_table(
                 if missing:
                     # schema evolution (never written here → null fill)
                     # vs corruption (manifest row exists → raise)
-                    import os as _os
-
-                    name = _os.path.basename(path.as_py())
-                    pid = int(name[len("part-") : -len(".bin")])
                     fallback = missing_column_rows(enc_dir, pid, missing)
                 if not blobs and not missing:
                     continue
                 if validate_crc:
-                    import os as _os
-                    import zlib as _zlib
-
-                    name = _os.path.basename(path.as_py())
-                    pid = int(name[len("part-") : -len(".bin")])
                     crc_of = {
                         r["column"]: r["crc32"] for r in mf.read_partition_manifest(enc_dir, pid)
                     }

@@ -86,3 +86,90 @@ def test_nonconvergence_raises(spark):
     pairs = _pairs(spark, [(i, i + 1) for i in range(5)])
     with pytest.raises(RuntimeError, match="converge"):
         dup_clusters(docs, pairs, max_iter=0)
+
+
+def test_overlapping_calls_restore_constraint_propagation(spark):
+    """Two threads toggle constraint propagation on one session with
+    overlapping lifetimes: the conf stays off until the LAST caller
+    leaves, then the value the FIRST caller saw comes back (per-caller
+    save/restore left it off for good)."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from parquet_go_spark.ops import cluster
+
+    key = "spark.sql.constraintPropagation.enabled"
+    spark.conf.set(key, "true")
+    a_in, b_in, a_out = threading.Event(), threading.Event(), threading.Event()
+    seen = {}
+
+    def first():
+        with cluster._constraint_propagation_off(spark):
+            a_in.set()
+            assert b_in.wait(60)
+        seen["after_first"] = spark.conf.get(key)
+        a_out.set()
+
+    def second():
+        assert a_in.wait(60)
+        with cluster._constraint_propagation_off(spark):
+            b_in.set()
+            assert a_out.wait(60)
+            seen["second_inside"] = spark.conf.get(key)
+
+    with ThreadPoolExecutor(2) as ex:
+        for f in [ex.submit(first), ex.submit(second)]:
+            f.result()
+    assert seen == {"after_first": "false", "second_inside": "false"}
+    assert spark.conf.get(key) == "true"
+    assert not cluster._cp_users
+
+    # and two real overlapping calls agree and leave the conf as found
+    docs = _docs(spark, [(i, "x") for i in range(8)])
+    pairs = _pairs(spark, [(0, 1), (1, 2), (5, 6)])
+
+    def run(_):
+        return sorted(tuple(r) for r in dup_clusters(docs, pairs).collect())
+
+    with ThreadPoolExecutor(2) as ex:
+        a, b = ex.map(run, range(2))
+    assert a == b and dict(a)[2] == 0 and dict(a)[6] == 5
+    assert spark.conf.get(key) == "true"
+
+
+def test_constraint_propagation_toggle_under_thread_stress(spark):
+    """More threads than cores enter and leave the toggle at random on
+    one session: inside, the conf always reads off; after the last one
+    leaves, it reads as it did before any entered."""
+    import os
+    import random
+    import sys
+    import threading
+
+    from parquet_go_spark.ops import cluster
+
+    key = "spark.sql.constraintPropagation.enabled"
+    spark.conf.set(key, "true")
+    bad = []
+
+    def worker(seed):
+        r = random.Random(seed)
+        for _ in range(40):
+            with cluster._constraint_propagation_off(spark):
+                if r.random() < 0.3 and spark.conf.get(key) != "false":
+                    bad.append(seed)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(2 * (os.cpu_count() or 2) + 1)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old)
+    assert bad == []
+    assert spark.conf.get(key) == "true"
+    assert not cluster._cp_users
